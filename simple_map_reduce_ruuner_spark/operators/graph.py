@@ -102,8 +102,8 @@ def pagerank_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4.44 s per invocation; dropping the nodes checkpoint instead
     # LOSES (5.28 s) because deg is re-derived per unrolled consumer.
     #
-    # r16 NULL RESULT (receipts in OPTIMIZATION_r16.md): a
-    # preserve_partitioning rewrite cut the plan to 5 Exchange (each
+    # r16 NULL RESULT (receipts in OPTIMIZATION_r16.md): a since-reverted
+    # partitioning-preserving checkpoint cut the plan to 5 Exchange (each
     # iteration riding the checkpointed hash(src)/hash(node) layout,
     # shuffle-hash contribution joins) but LOST 1.4-1.7 s per invocation
     # in full-bench context with BOTH storage levels — the PR_ITERS+1

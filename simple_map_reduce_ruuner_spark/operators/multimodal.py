@@ -299,9 +299,7 @@ def _ppm_decode_fn():
     return decode
 
 
-def decode_image_ppm(
-    spark: SparkSession, sf_dir: str, backend: str = "auto"
-) -> DataFrame:
+def decode_image_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image-codec round trip over a public format: encode each doc
     as a valid binary Netpbm P6 (PPM) image, then decode it with an
     actual header parser — no synthetic pixel shortcut on the decode
@@ -320,17 +318,10 @@ def decode_image_ppm(
     features straight from the text bytes and the dimension formula —
     agreement proves the encode->parse->extract round trip is lossless.
     """
-    from simple_map_reduce_ruuner_spark.operators import codec_backends
-
     df = _with_payload(spark, sf_dir)
     encoded = df.mapInPandas(_ppm_encode_fn(), "doc_id long, ppm binary")
-    kernel = (
-        codec_backends.pil_image_decode_fn("ppm", "ppm")
-        if codec_backends.resolve_backend("ppm", backend) == "native"
-        else _ppm_decode_fn()
-    )
     return encoded.mapInPandas(
-        kernel,
+        _ppm_decode_fn(),
         "doc_id long, width long, height long, "
         "mean_r_milli long, mean_g_milli long, mean_b_milli long",
     )
@@ -700,9 +691,7 @@ def _png_decode_fn():
     return decode
 
 
-def decode_image_png(
-    spark: SparkSession, sf_dir: str, backend: str = "auto"
-) -> DataFrame:
+def decode_image_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PNG codec round trip, stdlib-only (RFC 2083: zlib deflate +
     the five scanline filters + CRC-checked chunks). Encode each doc as
     a valid 8-bit RGB PNG — per-row filter type rotates through all
@@ -718,19 +707,10 @@ def decode_image_png(
     verdict item 4); the NotImplementedError seam now covers only
     JPEG/webp/audio/video, which genuinely need external codecs.
     """
-    from simple_map_reduce_ruuner_spark.operators import codec_backends
-
     df = _with_payload(spark, sf_dir)
     encoded = df.mapInPandas(_png_encode_fn(), "doc_id long, png binary")
-    resolved = codec_backends.resolve_backend("png", backend)
-    if resolved == "native":
-        kernel = codec_backends.pil_image_decode_fn("png", "png")
-    elif resolved == "numpy":
-        kernel = codec_backends.numpy_png_decode_fn()
-    else:
-        kernel = _png_decode_fn()
     return encoded.mapInPandas(
-        kernel,
+        _png_decode_fn(),
         "doc_id long, width long, height long, "
         "mean_r_milli long, mean_g_milli long, mean_b_milli long",
     )
@@ -880,9 +860,7 @@ def _wav_decode_fn():
     return decode
 
 
-def decode_audio_wav(
-    spark: SparkSession, sf_dir: str, backend: str = "auto"
-) -> DataFrame:
+def decode_audio_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio-codec round trip, stdlib-only: encode each doc as a
     valid 16-bit PCM RIFF/WAVE file (mono/stereo, 8-24 kHz and frame
     count varying per doc; an odd-length LIST chunk forces word-aligned
@@ -893,17 +871,10 @@ def decode_audio_wav(
     beside decode_image_ppm/decode_image_png; the NotImplementedError
     seam now covers only compressed media (JPEG/webp, lossy audio,
     video)."""
-    from simple_map_reduce_ruuner_spark.operators import codec_backends
-
     df = _with_payload(spark, sf_dir)
     encoded = df.mapInPandas(_wav_encode_fn(), "doc_id long, wav binary")
-    kernel = (
-        codec_backends.wav_native_decode_fn()
-        if codec_backends.resolve_backend("wav", backend) == "native"
-        else _wav_decode_fn()
-    )
     return encoded.mapInPandas(
-        kernel,
+        _wav_decode_fn(),
         "doc_id long, sample_rate long, channels long, n_frames long, "
         "mean_milli long, peak long",
     )

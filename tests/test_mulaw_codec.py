@@ -69,6 +69,18 @@ def test_expansion_monotone_per_segment():
     assert all(a > b for a, b in zip(mags, mags[1:]))
 
 
+def test_g711_expansion_matches_cpython_c_table():
+    """The production decoder vs CPython's C G.711 implementation on all
+    256 codewords: one 1-sample mu-law WAV per codeword, so peak and
+    trough are both that codeword's expansion."""
+    audioop = pytest.importorskip("audioop")
+    theirs = np.frombuffer(audioop.ulaw2lin(bytes(range(256)), 2), dtype="<i2")
+    out = _decode([_wav(1, bytes([c])) for c in range(256)])
+    assert list(out.doc_id) == list(range(256))
+    assert (out.peak == theirs).all()
+    assert (out.trough == theirs).all()
+
+
 def test_roundtrip_inverts_encoder():
     enc = _encode([b"xyz", b""], [1, 2])
     out = _decode(list(enc["wav"]), list(enc["doc_id"]))
