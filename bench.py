@@ -459,14 +459,8 @@ def main() -> None:
             }
         )
 
-    # Heap/cache telemetry (r14, judge item 2): JVM heap after each
-    # round-robin pass, and an experiment arm that drops the session
-    # caches between passes (SPARK_GRAFT_BENCH_CLEAR_CACHES=1) — the
-    # A/B that tests whether the _REGISTERED_CACHES checkpoint blocks
-    # accumulate enough heap pressure to explain cross-round drift.
-    clear_between = (
-        os.environ.get("SPARK_GRAFT_BENCH_CLEAR_CACHES", "0") == "1"
-    )
+    # Heap telemetry (r14, judge item 2): JVM heap after each
+    # round-robin pass.
     heap_trace: list[dict] = []
 
     def record_heap(label: str) -> None:
@@ -488,9 +482,6 @@ def main() -> None:
     for i in range(reps):
         timed_pass(names, f"pass{i + 1}")
         record_heap(f"pass{i + 1}")
-        if clear_between:
-            n_drop = clear_session_caches(sf_dir)
-            record_heap(f"pass{i + 1}_cleared_{n_drop}")
 
     # Adaptive extra reps (r10): sub-second queries' 3-rep medians are
     # dominated by this VM's CPU-steal bursts (r9: a burst hitting 2 of
@@ -819,7 +810,6 @@ def main() -> None:
         "vs_r01_trimmed": vs_prev_trimmed,
         "machine": machine,
         "heap_trace": heap_trace,
-        "cleared_caches_between_passes": clear_between,
         "vs_prev_round": vs_prev_round,
         "vs_prev_round_machine_normalized": vs_prev_round_norm,
         "queries_trace_normalized": queries_trace_norm,

@@ -43,7 +43,6 @@ from simple_map_reduce_ruuner_spark.registry import Query
 from simple_map_reduce_ruuner_spark.sources.tables import (
     ckpt,
     load_table,
-    register_cache_clear_hook,
     session_cache,
     spread_scan,
 )
@@ -252,18 +251,15 @@ WHERE n_common * 1.0 / (sa.n + sb.n - n_common) >= {JACCARD_THRESHOLD}
 # feeds corpus_clean. Before r9 each of those seven queries recomputed
 # its whole chain from the corpus (100× curve: 325 s family total).
 # Session-scoped lazy checkpoints at every level (sources.tables.
-# session_cache — the co-trading/simhash pattern) make the first
-# EXECUTED query of the family materialize each subtree it touches once
-# per session+dataset; the rest ride the blocks.
-_SHINGLE_HASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-_LSH_CAND_CACHE: dict[tuple[str, str], DataFrame] = {}
-_LSH_VERIFIED_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CLUSTERS_CACHE: dict[tuple[str, str], DataFrame] = {}
+# session_cache families "shingle_hashes" → "lsh_candidates" →
+# "lsh_verified" → "clusters" — the co-trading/simhash pattern) make the
+# first EXECUTED query of the family materialize each subtree it touches
+# once per session+dataset; the rest ride the blocks.
 
 
 def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cache(
-        _SHINGLE_HASH_CACHE,
+        "shingle_hashes",
         spark,
         sf_dir,
         lambda: _doc_shingle_hashes_plan(spark, sf_dir),
@@ -340,11 +336,11 @@ MINHASH_SIGNATURES_SQL = _minhash_sql()
 
 
 def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate pairs, session-cached (see _LSH_CAND_CACHE block):
+    """Candidate pairs, session-cached (see the LSH pipeline block):
     consumed by neardup_lsh_verified, neardup_editdist, and
     neardup_shared_span besides its own registry entry."""
     return session_cache(
-        _LSH_CAND_CACHE, spark, sf_dir, lambda: _neardup_minhash_lsh_plan(spark, sf_dir)
+        "lsh_candidates", spark, sf_dir, lambda: _neardup_minhash_lsh_plan(spark, sf_dir)
     )
 
 
@@ -408,10 +404,10 @@ NEARDUP_MINHASH_LSH_SQL = _lsh_sql()
 
 
 def neardup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verified pairs, session-cached (see _LSH_VERIFIED_CACHE block):
+    """Verified pairs, session-cached (see the LSH pipeline block):
     consumed by neardup_clusters besides its own registry entry."""
     return session_cache(
-        _LSH_VERIFIED_CACHE,
+        "lsh_verified",
         spark,
         sf_dir,
         lambda: _neardup_lsh_verified_plan(spark, sf_dir),
@@ -490,16 +486,15 @@ SIMHASH_BITS = 60  # our portable hash has 60 usable bits
 
 # simhash signatures are consumed twice per session (the `simhash`
 # registry query and `simhash_band_pairs`, textlm.py) — same
-# keyed-lazy-checkpoint sharing as graph._COTRADING_CACHE: whichever
+# keyed-lazy-checkpoint sharing as graph's "cotrading" family: whichever
 # query EXECUTES first materializes the (doc_id, simhash) blocks
 # (n_docs × 16 B — tiny), the sibling rides them. eager=False keeps
 # construction job-free for EXPLAIN/plan tests/registry sweeps.
-_SIMHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cache(
-        _SIMHASH_CACHE, spark, sf_dir, lambda: _simhash_plan(spark, sf_dir)
+        "simhash", spark, sf_dir, lambda: _simhash_plan(spark, sf_dir)
     )
 
 
@@ -626,7 +621,7 @@ DEFAULT_CLUSTER_MAX_ITER = 25
 def neardup_clusters(
     spark: SparkSession, sf_dir: str, max_iter: int | None = None
 ) -> DataFrame:
-    """Session-cached (default max_iter only; see _CLUSTERS_CACHE
+    """Session-cached (default max_iter only; see the LSH pipeline
     block): the fixpoint loop below runs EAGERLY at call time, so
     without the memo corpus_clean re-runs the whole iteration. The
     result is already a localCheckpoint — memoized as-is
@@ -637,7 +632,7 @@ def neardup_clusters(
     if max_iter is not None:
         return _neardup_clusters_fixpoint(spark, sf_dir, max_iter)
     return session_cache(
-        _CLUSTERS_CACHE,
+        "clusters",
         spark,
         sf_dir,
         lambda: _neardup_clusters_fixpoint(
@@ -760,33 +755,6 @@ COSINE_DUP_THRESHOLD = 0.45
 # broadcast contract is enforced, not aspirational.
 MAX_BROADCAST_VECTORS = 2_000_000
 
-# (applicationId, parquet fingerprint) -> Broadcast[(ids, matrix, norms)];
-# see neardup_embedding. At most one live entry per SparkContext.
-_EMB_BUILD_CACHE: dict[tuple, object] = {}
-
-
-def _clear_emb_build_cache(sf_dir: str | None) -> None:
-    """clear_session_caches() hook: the broadcast cache is keyed by
-    (app, parquet file fingerprint) rather than (app, sf_dir), and its
-    values need an explicit Broadcast.unpersist — the generic dict
-    sweep can't do either."""
-    real = os.path.realpath(sf_dir) + os.sep if sf_dir is not None else None
-    victims = [
-        k
-        for k in _EMB_BUILD_CACHE
-        if real is None
-        or any(os.path.realpath(f).startswith(real) for f, _, _ in k[1])
-    ]
-    for k in victims:
-        try:
-            _EMB_BUILD_CACHE.pop(k).unpersist()
-        except Exception:
-            pass  # context already stopped; nothing to free
-
-
-register_cache_clear_hook(_clear_emb_build_cache)
-
-
 def _parquet_file_stats(path: str) -> tuple[tuple[str, int, int], ...]:
     """(file, size, mtime_ns) fingerprint of a parquet file/directory —
     the cache key for anything derived from its on-disk content."""
@@ -863,26 +831,21 @@ def neardup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         return emb.sparkSession.createDataFrame(
             [], "vec_a long, vec_b long, cos_sim double"
         )
-    # Build side cached per (SparkContext, file fingerprint): the vector
-    # analog of reusing a broadcast hash-join build side across queries in
-    # one session. Repeated calls (bench reps, gate+bench) pay only the
-    # streaming-side matmul job; a changed file or restarted context
-    # rebuilds and unpersists the evicted broadcast. Measured at sf0.1:
+    # Build side session-cached: the vector analog of reusing a broadcast
+    # hash-join build side across queries in one session. Repeated calls
+    # (bench reps, gate+bench) pay only the streaming-side matmul job;
+    # clear_session_caches unpersists the broadcast. Measured at sf0.1:
     # the collect+broadcast rebuild is ~0.2-1.4 s of a ~0.6 s query.
-    key = (spark.sparkContext.applicationId, _parquet_file_stats(emb_path))
-    bc = _EMB_BUILD_CACHE.get(key)
-    if bc is None:
+    def build_side():
         side = emb.toPandas()  # parallel Arrow collect (size-checked above)
         ids_b = side["vec_id"].to_numpy(dtype=np.int64)
         M_b = np.stack([np.asarray(e, dtype=np.float64) for e in side["embedding"]])
         n_b = np.sqrt((M_b * M_b).sum(axis=1))
-        bc = spark.sparkContext.broadcast((ids_b, M_b, n_b))
-        for old_key in [k for k in _EMB_BUILD_CACHE if k[0] == key[0]]:
-            try:
-                _EMB_BUILD_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass  # context already stopped; nothing to free
-        _EMB_BUILD_CACHE[key] = bc
+        return spark.sparkContext.broadcast((ids_b, M_b, n_b))
+
+    bc = session_cache(
+        "emb_broadcast", spark, sf_dir, build_side, checkpoint=False
+    )
     threshold = COSINE_DUP_THRESHOLD
 
     def score(batches):

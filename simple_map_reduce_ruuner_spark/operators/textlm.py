@@ -282,7 +282,7 @@ def simhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(xor), the SimHash twin of ``neardup_lsh_verified``.
 
     ``simhash()`` returns the session-cached signature checkpoint
-    (dedup._SIMHASH_CACHE), so whichever of this query and the
+    (the "simhash" family), so whichever of this query and the
     ``simhash`` registry entry executes first materializes the
     (doc_id, simhash) blocks and the other rides them — 100×: 62.8 s
     (recompute-from-scratch) → 17.6 s (rider).
@@ -633,7 +633,6 @@ _BPE_SYMS = (
 # still materialize on first EXECUTION (cold member), and the per-rep
 # encode/argmax data work downstream of the chain is unchanged.
 # Default-k only — a caller exploring another k builds a fresh chain.
-_BPE_CHAIN_CACHE: dict = {}
 
 
 def _bpe_state_chain(
@@ -644,13 +643,13 @@ def _bpe_state_chain(
     emits the merge table) and the encoder (which tokenizes with the
     final state). State rows carry (w, enc, wc); see
     :func:`bpe_train_merges` for the algorithm and oracle discipline.
-    Session-cached at the default k (see _BPE_CHAIN_CACHE)."""
+    Session-cached at the default k (see the block above)."""
     if k < 1:
         raise ValueError(f"BPE needs at least one merge step, got k={k}")
     if k != BPE_MERGES:
         return _bpe_chain_build(spark, sf_dir, k)
     return session_cache(
-        _BPE_CHAIN_CACHE,
+        "bpe_chain",
         spark,
         sf_dir,
         lambda: _bpe_chain_build(spark, sf_dir, k),

@@ -130,8 +130,8 @@ def apply_dataset_sizing(
     """Size ``spark.sql.shuffle.partitions`` for ``sf_dir`` from its
     footers and warn if the live driver heap is under the
     recommendation (heap is fixed at JVM start — a probe that needs
-    more must export SPARK_GRAFT_DRIVER_MEM before get_spark; see
-    tools/scale_probe_1000x_docs.py).
+    more must export SPARK_GRAFT_DRIVER_MEM before get_spark; see the
+    ``sizing`` block of SCALE_CURVE_1000X_DOCS_r11.json).
 
     ``explode_factor`` is the per-operator working-set expansion hint:
     the default (measured on the text shingle ladder) covers ordinary

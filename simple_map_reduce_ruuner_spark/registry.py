@@ -129,8 +129,8 @@ def _builtin_queries() -> dict[str, Query]:
     return q
 
 
-# Session-cache families: registry queries that share a session_cache'd
-# subtree (tables.session_cache / the dedup broadcast build). Whichever
+# Session-cache families: registry queries that share a cached subtree
+# (a tables.session_cache family key, or an on-disk index). Whichever
 # member executes FIRST on a dataset pays the materialization ("cold");
 # every later execution — sibling queries and later bench reps — rides
 # the checkpoint blocks. bench.py tags its per-query output with these
@@ -138,8 +138,8 @@ def _builtin_queries() -> dict[str, Query]:
 # tests/test_cache_families.py re-derives membership from the static
 # call graph so this map cannot drift from the code.
 CACHE_FAMILIES: dict[str, tuple[str, ...]] = {
-    # dedup.py: _SHINGLE_HASH_CACHE → _LSH_CAND_CACHE →
-    # _LSH_VERIFIED_CACHE → _CLUSTERS_CACHE ladder
+    # dedup.py families "shingle_hashes" → "lsh_candidates" →
+    # "lsh_verified" → "clusters" ladder
     "lsh_pipeline": (
         "corpus_clean",
         "minhash_signatures",
@@ -151,11 +151,11 @@ CACHE_FAMILIES: dict[str, tuple[str, ...]] = {
         "neardup_shared_span",
         "source_overlap_minhash",
     ),
-    # dedup._SIMHASH_CACHE (textlm.simhash_band_pairs rides it)
+    # dedup.py family "simhash" (textlm.simhash_band_pairs rides it)
     "simhash": ("simhash", "simhash_band_pairs"),
-    # graph._COTRADING_CACHE
+    # graph.py family "cotrading"
     "cotrading": ("cotrading_triangles", "supplier_cotrading_pairs"),
-    # dedup._EMB_BUILD_CACHE: single member, but rep 1 pays the
+    # dedup.py family "emb_broadcast": single member, but rep 1 pays the
     # collect+broadcast build and later reps ride it
     "emb_broadcast": ("neardup_embedding",),
     # ivf.build_ivf_index: content-keyed ON-DISK index (outlives the
@@ -165,8 +165,8 @@ CACHE_FAMILIES: dict[str, tuple[str, ...]] = {
     # bpe_index.build_bpe_merges: content-keyed ON-DISK merge table
     # (same contract as ivf_index — first member builds, riders reuse)
     "bpe_merges": ("bpe_encode_indexed", "bpe_merge_table"),
-    # textlm._BPE_CHAIN_CACHE: the k-step training chain (lazy per-step
-    # localCheckpoints) built once per (session, corpus) — rebuilding it
+    # textlm.py family "bpe_chain": the k-step training chain (lazy
+    # per-step localCheckpoints) built once per (session, corpus) — rebuilding it
     # is ~k × 0.5 s of driver-side physical planning with no data work.
     # The indexed twins appear here too because build_bpe_merges walks
     # the same chain when the on-disk index is cold.

@@ -3,6 +3,14 @@
 The reference ingests only uploaded newline-delimited text
 (Master.java:87-129); this engine adds typed columnar sources. Tables are
 the TPC-H-ish star schema plus events/documents/embeddings (TESTDATA.md).
+
+Session cache: this module is the only owner of cached driver-side
+state. Every entry — a table scan, a shared checkpointed subtree, the
+embedding broadcast — lives in one store keyed
+``(family, applicationId, realpath(sf_dir))``. An entry lives until
+:func:`clear_session_caches` drops it (all entries, or one dataset's);
+a restarted session has a new applicationId and so rebuilds rather
+than touching dead block-manager state.
 """
 
 from __future__ import annotations
@@ -27,46 +35,31 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# (applicationId, realpath(sf_dir)) -> {table name -> DataFrame}.
-# ``spark.read.parquet`` is ~100 ms of DRIVER work per call (py4j
-# round-trips + file listing + footer/schema read), and the registry's
-# 200 query builders call load_table 1-6× each — measured 0.15-0.75 s
-# of per-query build time at sf0.1, all of it re-resolving the same
-# ten immutable fixture tables (guide §6: file listing is driver-side,
-# single-process work; Spark's own catalog caches it per session for
-# exactly this reason). The memo stores the UNRESOLVED DataFrame (a
-# logical plan — no data, no blocks, nothing materialized), so reusing
-# it is semantically identical to re-reading: execution still scans
-# parquet every time. Keyed by applicationId so a restarted session
-# re-lists, and registered for clear_session_caches so dataset-scoped
-# clears drop it like every other session memo.
-_TABLE_MEMO: dict = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one parquet table. Filters/projections applied downstream are
     pushed into this scan by Catalyst (PushedFilters / ReadSchema).
 
-    The returned DataFrame is memoized per (session, dataset dir,
-    table): tables under an sf_dir are immutable fixtures, and the
-    memo only dedupes driver-side plan construction (listing + schema
-    resolution), never data."""
-    if not any(c is _TABLE_MEMO for c in _REGISTERED_CACHES):
-        _REGISTERED_CACHES.append(_TABLE_MEMO)
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    per_dir = _TABLE_MEMO.get(key)
-    if per_dir is None:
-        per_dir = _TABLE_MEMO[key] = {}
-    got = per_dir.get(name)
-    if got is None:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        got = (
+    Memoized in the session cache under family ``table:<name>``.
+    ``spark.read.parquet`` is ~100 ms of DRIVER work per call (py4j
+    round-trips + file listing + footer/schema read), and the registry's
+    200 query builders call load_table 1-6× each — measured 0.15-0.75 s
+    of per-query build time at sf0.1, all of it re-resolving the same
+    ten immutable fixture tables (guide §6: file listing is driver-side,
+    single-process work). The memo stores the UNRESOLVED DataFrame (a
+    logical plan — no data, no blocks), so reusing it is semantically
+    identical to re-reading: execution still scans parquet every time."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return session_cache(
+        f"table:{name}",
+        spark,
+        sf_dir,
+        lambda: (
             _load_events(spark, path)
             if name == "events"
             else spark.read.parquet(path)
-        )
-        per_dir[name] = got
-    return got
+        ),
+        checkpoint=False,
+    )
 
 
 def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -100,85 +93,69 @@ def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
     )
 
 
-# Every dict handed to session_cache(), so clear_session_caches() can
-# find them without each operator module exporting its private cache.
-_REGISTERED_CACHES: list[dict] = []
-# Clear hooks for caches with non-(app, sf_dir) keys or non-DataFrame
-# values (the embedding broadcast); called with the sf_dir filter.
-_CLEAR_HOOKS: list = []
-
-
-def register_cache_clear_hook(hook) -> None:
-    """Register ``hook(sf_dir: str | None)`` to run inside
-    :func:`clear_session_caches` — for caches that need custom teardown
-    (e.g. ``Broadcast.unpersist``) or use non-standard keys."""
-    if not any(h is hook for h in _CLEAR_HOOKS):
-        _CLEAR_HOOKS.append(hook)
+# (family, applicationId, realpath(sf_dir)) -> cached value.
+_STORE: dict[tuple[str, str, str], object] = {}
+# perfbench/run.py reads this name for its sources.cache_fills metric.
+_REGISTERED_CACHES = (_STORE,)
 
 
 def clear_session_caches(sf_dir: str | None = None) -> int:
-    """Drop session-scoped memoized DataFrames so their localCheckpoint
-    blocks become ContextCleaner-collectable (the module-level dicts
-    otherwise hold strong references for the application's lifetime —
-    a multi-dataset session accumulates pinned MEMORY_AND_DISK blocks
-    per (app, sf_dir) key with no eviction). With ``sf_dir``, only that
-    dataset's keys are dropped — what bench.py does after its sf0.001
-    warm-up pass so stale warm-up blocks don't occupy the storage pool
-    during the timed run. Returns the number of evicted entries.
+    """Drop session cache entries — every entry, or with ``sf_dir`` only
+    that dataset's — so their localCheckpoint blocks become
+    ContextCleaner-collectable and their broadcasts are unpersisted.
+    bench.py clears its sf0.001 warm-up dir this way so stale warm-up
+    blocks don't occupy the storage pool during the timed run. Returns
+    the number of evicted entries.
 
     NOT called automatically on dataset switch: tools/scale_curve.py
     interleaves small/big dirs per rep BY DESIGN (cold/rider family
     semantics), and auto-eviction would thrash those caches."""
     import gc
 
+    from pyspark import Broadcast
+
     real = os.path.realpath(sf_dir) if sf_dir is not None else None
-    n = 0
-    for cache in _REGISTERED_CACHES:
-        victims = [
-            k
-            for k in cache
-            if real is None
-            or (isinstance(k, tuple) and len(k) == 2 and k[1] == real)
-        ]
-        for k in victims:
-            cache.pop(k, None)
-            n += 1
-    for hook in _CLEAR_HOOKS:
-        hook(sf_dir)
+    victims = [k for k in _STORE if real is None or k[2] == real]
+    for k in victims:
+        got = _STORE.pop(k)
+        if isinstance(got, Broadcast):
+            try:
+                got.unpersist()
+            except Exception:
+                pass  # context already stopped; nothing to free
     # The checkpoint RDDs are now unreferenced on the Python side; a GC
     # cycle lets py4j drop the JVM refs so ContextCleaner frees blocks.
     gc.collect()
-    return n
+    return len(victims)
 
 
 def session_cache(
-    cache: dict, spark: SparkSession, sf_dir: str, build, checkpoint: bool = True
-) -> DataFrame:
-    """Session-scoped memo of a per-dataset DataFrame, keyed by
-    (applicationId, resolved sf_dir) — the shared-subtree pattern behind
-    graph._COTRADING_CACHE and dedup's LSH-pipeline caches.
+    family: str, spark: SparkSession, sf_dir: str, build, checkpoint: bool = True
+):
+    """The session cache: ``build()`` runs once per key
+    ``(family, applicationId, realpath(sf_dir))`` and its result is
+    returned until :func:`clear_session_caches` drops the entry. Each
+    call site passes its own string-literal ``family``; ``table:<name>``
+    belongs to :func:`load_table`.
 
-    ``build()`` runs once per (session, dataset); with ``checkpoint``
-    the result is wrapped in a LAZY localCheckpoint (``ckpt(eager=
-    False)``), so construction stays job-free (EXPLAIN, plan tests,
-    registry sweeps), the first query that EXECUTES materializes the
-    blocks (serialized MEMORY_AND_DISK — spills, never OOMs), and every
-    later execution in the session — sibling queries of the same
-    family, later bench reps — reads the blocks. ``checkpoint=False``
-    memoizes the DataFrame as-is, for builders that already return
-    checkpointed/eagerly-computed results (e.g. the connected-
-    components fixpoint). The applicationId key makes a restarted
-    session rebuild instead of touching dead block-manager state.
+    With ``checkpoint`` the result is wrapped in a LAZY localCheckpoint
+    (``ckpt(eager=False)``), so construction stays job-free (EXPLAIN,
+    plan tests, registry sweeps), the first query that EXECUTES
+    materializes the blocks (serialized MEMORY_AND_DISK — spills, never
+    OOMs), and every later execution in the session — sibling queries
+    of the same family, later bench reps — reads the blocks.
+    ``checkpoint=False`` memoizes the value as-is: table scans, results
+    that are already checkpointed (the connected-components fixpoint),
+    non-DataFrame values (the BPE state chain, the embedding
+    broadcast).
     """
-    if not any(c is cache for c in _REGISTERED_CACHES):
-        _REGISTERED_CACHES.append(cache)
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    got = cache.get(key)
+    key = (family, spark.sparkContext.applicationId, os.path.realpath(sf_dir))
+    got = _STORE.get(key)
     if got is None:
         got = build()
         if checkpoint:
             got = ckpt(got, eager=False)
-        cache[key] = got
+        _STORE[key] = got
     return got
 
 

@@ -1,56 +1,70 @@
-"""clear_session_caches(): eviction semantics for the session-scoped
-memo dicts (and the embedding broadcast's custom clear hook)."""
+"""clear_session_caches(): eviction semantics for the single session
+cache store in sources.tables (DataFrames, table scans and the
+embedding broadcast alike)."""
 
 from __future__ import annotations
 
 import os
 
+from pyspark import Broadcast
+
 from simple_map_reduce_ruuner_spark.sources import tables
 from simple_map_reduce_ruuner_spark.sources.tables import (
     clear_session_caches,
+    load_table,
     session_cache,
 )
 
+FAMILY = "test_eviction"
+
+
+def _family_dirs(family: str) -> set[str]:
+    return {k[2] for k in tables._STORE if k[0] == family}
+
 
 def test_clear_session_caches_by_dataset_and_global(spark, sf_dir, tmp_path):
-    other_dir = str(tmp_path)
-    cache: dict = {}
+    here, other = os.path.realpath(sf_dir), os.path.realpath(tmp_path)
     df = spark.range(3)
-    session_cache(cache, spark, sf_dir, lambda: df, checkpoint=False)
-    session_cache(cache, spark, other_dir, lambda: df, checkpoint=False)
-    assert len(cache) == 2
-    assert any(c is cache for c in tables._REGISTERED_CACHES)
+    session_cache(FAMILY, spark, sf_dir, lambda: df, checkpoint=False)
+    session_cache(FAMILY, spark, str(tmp_path), lambda: df, checkpoint=False)
+    load_table(spark, sf_dir, "region")
+    assert _family_dirs(FAMILY) == {here, other}
+    assert here in _family_dirs("table:region")
 
-    # dataset-scoped eviction drops only that sf_dir's key
+    # dataset-scoped eviction drops only that sf_dir's keys, table scans
+    # included
     n = clear_session_caches(sf_dir)
-    assert n >= 1
-    assert len(cache) == 1
-    (key,) = cache
-    assert key[1] == os.path.realpath(other_dir)
+    assert n >= 2
+    assert _family_dirs(FAMILY) == {other}
+    assert here not in _family_dirs("table:region")
+    assert not any(k[2] == here for k in tables._STORE)
 
     # a later call rebuilds the evicted entry
-    session_cache(cache, spark, sf_dir, lambda: df, checkpoint=False)
-    assert len(cache) == 2
+    rebuilt = []
+    session_cache(
+        FAMILY, spark, sf_dir, lambda: rebuilt.append(1) or df, checkpoint=False
+    )
+    assert rebuilt == [1]
+    assert _family_dirs(FAMILY) == {here, other}
 
-    # global clear empties every registered cache
+    # global clear empties the store
     clear_session_caches()
-    assert not cache
+    assert not tables._STORE
 
 
-def test_clear_hook_runs_and_emb_cache_is_registered(spark, sf_dir):
-    """The embedding broadcast cache has non-(app, sf_dir) keys, so it is
-    cleared via a registered hook rather than the generic dict sweep."""
+def test_emb_broadcast_is_stored_and_cleared_by_dataset(spark, sf_dir):
+    """neardup_embedding keeps its build-side Broadcast in the store;
+    a dataset-scoped clear drops (and unpersists) it."""
     from simple_map_reduce_ruuner_spark.operators import dedup
 
-    assert any(
-        h is dedup._clear_emb_build_cache for h in tables._CLEAR_HOOKS
-    )
-    # Build the broadcast by running the query plan once at sf_dir, then
-    # clear that dataset and observe the cache entry go away.
     dedup.neardup_embedding(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    app = spark.sparkContext.applicationId
-    assert any(k[0] == app for k in dedup._EMB_BUILD_CACHE)
+    key = (
+        "emb_broadcast",
+        spark.sparkContext.applicationId,
+        os.path.realpath(sf_dir),
+    )
+    assert isinstance(tables._STORE.get(key), Broadcast)
     clear_session_caches(sf_dir)
-    assert not any(k[0] == app for k in dedup._EMB_BUILD_CACHE)
+    assert key not in tables._STORE

@@ -17,7 +17,7 @@ import os
 
 from simple_map_reduce_ruuner_spark.registry import CACHE_FAMILIES, all_queries
 
-# session_cache'd (or broadcast-cached) helpers, per family. Adding a
+# session_cache'd helpers (or on-disk index builders), per family. Adding a
 # new session_cache call site requires a row here AND in CACHE_FAMILIES
 # (test_every_cached_helper_is_mapped below fails otherwise).
 FAMILY_HELPERS = {
@@ -34,7 +34,7 @@ FAMILY_HELPERS = {
     # same cold/rider bench semantics: first member builds, rest reuse
     "ivf_index": {"build_ivf_index"},
     "bpe_merges": {"build_bpe_merges"},
-    # textlm._BPE_CHAIN_CACHE: the k-step training chain built once per
+    # textlm's "bpe_chain" key: the k-step training chain built once per
     # (session, corpus); the index writer also rides it when it builds
     "bpe_chain": {"_bpe_state_chain"},
 }
@@ -154,6 +154,42 @@ def test_every_cached_helper_is_mapped():
         "add the helper to FAMILY_HELPERS and the consumers to "
         "registry.CACHE_FAMILIES"
     )
+
+
+def test_session_cache_family_keys_distinct():
+    """session_cache keys entries by its family string, so two call
+    sites passing the same family would silently hand each other their
+    cached values. Every call site in the operators package must pass a
+    string literal, no two the same, and none under the ``table:``
+    prefix that sources.tables.load_table owns."""
+    sites: dict[str, list[str]] = collections.defaultdict(list)
+    non_literal = []
+    for fname in sorted(os.listdir(_OPS_DIR)):
+        if not fname.endswith(".py"):
+            continue
+        with open(os.path.join(_OPS_DIR, fname)) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "session_cache"
+            ):
+                continue
+            fam = node.args[0] if node.args else None
+            if isinstance(fam, ast.Constant) and isinstance(fam.value, str):
+                sites[fam.value].append(f"{fname}:{node.lineno}")
+            else:
+                non_literal.append(f"{fname}:{node.lineno}")
+    assert sites, "no session_cache call sites found"
+    assert not non_literal, (
+        f"session_cache call sites without a string-literal family: "
+        f"{non_literal}"
+    )
+    dupes = {f: locs for f, locs in sites.items() if len(locs) > 1}
+    assert not dupes, f"session_cache family keys reused: {dupes}"
+    reserved = sorted(f for f in sites if f.startswith("table:"))
+    assert not reserved, f"families under load_table's 'table:' prefix: {reserved}"
 
 
 def test_helper_names_unique():
