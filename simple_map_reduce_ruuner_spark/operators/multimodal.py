@@ -6,19 +6,14 @@ Arrow-batched Pandas functions (``mapInPandas``) so bytes cross the
 Python boundary in columnar batches, never row-at-a-time.
 
 The driver tables carry no real media, so the binary column is
-synthesized deterministically (UTF-8 payload of the document text).
-REAL here: the Spark-side plumbing (binary column handling, metadata
-projection, mapInPandas batch signature, schema/partition behavior) AND
-three full public-format codecs — :func:`decode_image_ppm` encodes
-valid binary Netpbm P6 images and decodes them with an actual header
-parser (r11; no image library needed, the format is bytes +
-arithmetic), :func:`decode_image_png` (r12) does the same for PNG with
-stdlib zlib (all five scanline filters, CRC-checked chunks, multi-IDAT
-reassembly), and :func:`decode_audio_wav` (r12) covers the audio leg
-with a word-aligned RIFF/PCM parser. Codecs that genuinely need
-external libraries (JPEG/webp, lossy audio, video) remain behind
-:func:`decode_media_stub` / :func:`decode_image_pil`, which raise
-``NotImplementedError`` exactly where PIL/ffmpeg would plug in.
+synthesized deterministically (UTF-8 payload of the document text, see
+:func:`_with_payload`). REAL here: the Spark-side plumbing (binary
+column handling, metadata projection, mapInPandas batch signature,
+schema/partition behavior). The thirteen public-format codecs that
+encode this payload into real media and decode it back (PPM, PNG, WAV,
+JPEG, ... and the archive containers) are rows of the codec table in
+operators/codecs.py, which shares ``_with_payload`` and the oracle
+byte helpers below.
 
 - multimodal_meta     — metadata projection over the binary column
                         (size, sha256 digest, synthetic format tag).
@@ -26,6 +21,8 @@ external libraries (JPEG/webp, lossy audio, video) remain behind
                         the raw bytes via mapInPandas (the decode-shaped
                         hot path, Arrow-batched); exact DuckDB oracle
                         since the payload is deterministic.
+- frame_sample        — evenly spaced byte windows per payload, one
+                        digest row per frame.
 """
 
 from __future__ import annotations
@@ -42,25 +39,16 @@ from simple_map_reduce_ruuner_spark.sources.tables import load_table, spread_sca
 FORMATS = ("jpeg", "png", "webp")
 
 
-# Oracle helpers shared by every codec oracle (here and in
+# Oracle helper shared by every byte-level oracle (here and in
 # operators/codecs.py): byte j (a 1-based SQL position expression) of
-# the hex()-encoded UTF-8 blob `h`, and the cycled variant that wraps a
-# 0-based offset expression over the n source bytes (0 for empty docs).
-# One site for the two-hex-digit strpos decode — review-found: the
-# pattern used to be copy-pasted across every oracle string.
+# the hex()-encoded UTF-8 blob `h`. One site for the two-hex-digit
+# strpos decode — review-found: the pattern used to be copy-pasted
+# across every oracle string.
 def hex_byte_sql(j: str) -> str:
     """1-based byte at position `j` of hex column h, as an integer."""
     return (
         f"(strpos('0123456789ABCDEF', h[2*({j})-1 : 2*({j})-1]) - 1) * 16"
         f" + (strpos('0123456789ABCDEF', h[2*({j}) : 2*({j})]) - 1)"
-    )
-
-
-def cycled_byte_sql(offset: str) -> str:
-    """Byte at 0-based `offset` cycled over the n source bytes."""
-    return (
-        f"CASE WHEN n = 0 THEN 0 ELSE "
-        f"{hex_byte_sql(f'(({offset}) % n) + 1')} END"
     )
 
 
@@ -200,167 +188,6 @@ IMG_PIXELS = IMG_SIDE * IMG_SIDE
 EDGE_THRESHOLD = 16
 
 
-def _ppm_encode_fn():
-    """Factory for the P6 encode kernel (module-level so tests drive the
-    production code path; the RETURNED closure is self-contained and
-    pickled by value, so executors never import this package)."""
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            blobs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w = 4 + doc_id % 5
-                h = 3 + doc_id % 7
-                need = int(w * h * 3)
-                t = np.frombuffer(bytes(payload), dtype=np.uint8)
-                px = (
-                    np.resize(t, need)  # cycles the source bytes
-                    if t.size
-                    else np.zeros(need, dtype=np.uint8)
-                )
-                blobs.append(b"P6\n%d %d\n255\n" % (w, h) + px.tobytes())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ppm": blobs})
-
-    return encode
-
-
-def _ppm_decode_fn():
-    """Factory for the P6 decode kernel: a REAL Netpbm parser (magic,
-    '#'-comments, whitespace-tokenized width/height/maxval, one
-    whitespace byte before the raster), then numpy per-channel integer
-    means. Rejects non-P6 and truncated input. Self-contained closure —
-    see _ppm_encode_fn for the pickling contract."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def parse_header(b: bytes) -> tuple[int, int, int, int]:
-            """(width, height, maxval, raster_offset) per the Netpbm
-            spec: 'P6', then whitespace-separated width/height/maxval
-            (with '#'-to-newline comments allowed anywhere whitespace
-            is), then exactly one whitespace byte before the raster."""
-            if b[:2] != b"P6":
-                raise ValueError("not a binary PPM (P6) payload")
-            # the magic must be its own token: 'P6123 4 ...' is NOT a
-            # valid header with width 123 — require whitespace (or a
-            # comment) between the magic and the first field
-            if not (b[2:3].isspace() or b[2:3] == b"#"):
-                raise ValueError("malformed PPM: no whitespace after magic")
-            pos, end, fields = 2, len(b), []
-            while len(fields) < 3:
-                while pos < end and (
-                    b[pos : pos + 1].isspace() or b[pos] == 0x23  # '#'
-                ):
-                    if b[pos] == 0x23:  # comment runs to end of line
-                        while pos < end and b[pos] != 0x0A:
-                            pos += 1
-                    else:
-                        pos += 1
-                start = pos
-                while pos < end and not b[pos : pos + 1].isspace():
-                    pos += 1
-                if start == pos:
-                    raise ValueError("truncated PPM header")
-                fields.append(int(b[start:pos]))
-            return fields[0], fields[1], fields[2], pos + 1
-
-        for pdf in batches:
-            ids, ws, hs, means = [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["ppm"]):
-                b = bytes(blob)
-                w, h, maxval, off = parse_header(b)
-                if maxval != 255:
-                    raise ValueError("8-bit raster expected")
-                px = np.frombuffer(
-                    b, dtype=np.uint8, offset=off, count=h * w * 3
-                ).reshape(h * w, 3)
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                means.append(px.sum(axis=0, dtype=np.int64) * 1000 // (w * h))
-            m = (
-                np.stack(means)
-                if means
-                else np.empty((0, 3), dtype=np.int64)
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "mean_r_milli": m[:, 0],
-                    "mean_g_milli": m[:, 1],
-                    "mean_b_milli": m[:, 2],
-                }
-            )
-
-    return decode
-
-
-def decode_image_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image-codec round trip over a public format: encode each doc
-    as a valid binary Netpbm P6 (PPM) image, then decode it with an
-    actual header parser — no synthetic pixel shortcut on the decode
-    side (replaces r1-r10's ``decode_image_fake``, which skipped the
-    format and read raw payload bytes; the ``NotImplementedError`` seam
-    now covers only genuinely-absent codecs: JPEG/PNG/webp/ffmpeg).
-
-    Encode stage (mapInPandas): ``P6\\n{w} {h}\\n255\\n`` header + w*h*3
-    RGB bytes, pixels drawn by cycling the doc's UTF-8 text bytes
-    (zero-filled for empty docs). Dimensions vary per doc
-    (w = 4 + doc_id % 5, h = 3 + doc_id % 7) so the decoder must
-    genuinely parse the header — a fixed-size crop could fake it.
-
-    Decode stage (second mapInPandas): _ppm_decode_fn's spec parser,
-    then per-channel integer means. The DuckDB oracle recomputes the
-    features straight from the text bytes and the dimension formula —
-    agreement proves the encode->parse->extract round trip is lossless.
-    """
-    df = _with_payload(spark, sf_dir)
-    encoded = df.mapInPandas(_ppm_encode_fn(), "doc_id long, ppm binary")
-    return encoded.mapInPandas(
-        _ppm_decode_fn(),
-        "doc_id long, width long, height long, "
-        "mean_r_milli long, mean_g_milli long, mean_b_milli long",
-    )
-
-
-# Oracle: recompute the features straight from the text BYTES (hex() of
-# the UTF-8 blob, two hex digits per byte — character indexing would
-# diverge on non-ASCII) and the dimension formula; byte i of the raster
-# cycles the n source bytes via ((i-1) % n) + 1. Shared template: the
-# PPM and PNG round trips differ only in their per-doc dimension
-# formulas (and the container format, which the oracle never sees — a
-# hash match therefore proves each codec's encode->parse->extract trip
-# is lossless against the SAME ground truth).
-def _decode_image_oracle_sql(w_expr: str, h_expr: str) -> str:
-    return f"""
-WITH b AS (
-    SELECT doc_id, hex(encode(text)) AS h,
-           octet_length(encode(text))::BIGINT AS n,
-           ({w_expr})::BIGINT AS w, ({h_expr})::BIGINT AS ht
-    FROM documents
-),
-px AS (
-    SELECT doc_id, w, ht,
-      [ {cycled_byte_sql("i-1")} for i in range(1, w*ht*3 + 1) ] AS p
-    FROM b
-)
-SELECT doc_id, w AS width, ht AS height,
-  CAST(list_sum([p[3*k+1] for k in range(0, w*ht)]) * 1000 // (w*ht) AS BIGINT) AS mean_r_milli,
-  CAST(list_sum([p[3*k+2] for k in range(0, w*ht)]) * 1000 // (w*ht) AS BIGINT) AS mean_g_milli,
-  CAST(list_sum([p[3*k+3] for k in range(0, w*ht)]) * 1000 // (w*ht) AS BIGINT) AS mean_b_milli
-FROM px
-"""
-
-
-DECODE_IMAGE_PPM_SQL = _decode_image_oracle_sql(
-    "4 + doc_id % 5", "3 + doc_id % 7"
-)
-
-
 # Oracle byte extraction for the resize stage: the Spark path reads the
 # first 64 BYTES of the UTF-8 payload (np.frombuffer), so the oracle
 # must index bytes, not characters — substr/ascii would diverge on any
@@ -452,526 +279,6 @@ FROM px
 """
 
 
-# --- PNG codec (RFC 2083 / ISO 15948; stdlib-only: zlib + crc32) -----
-#
-# Per-doc dimensions deliberately differ from the PPM path so a decoder
-# that cheats by reusing decode_image_ppm's formula hash-mismatches.
-PNG_W_EXPR = "2 + doc_id % 6"  # 2..7 px wide
-PNG_H_EXPR = "2 + doc_id % 5"  # 2..6 px tall
-
-
-def _png_encode_fn():
-    """Factory for the PNG encode kernel: a REAL spec-conformant writer
-    (stdlib zlib/struct/binascii only — the point of the exercise).
-
-    Per doc: 8-bit RGB (color type 2), no interlace, w = 2 + doc_id % 6,
-    h = 2 + doc_id % 5, pixel bytes cycling the doc's UTF-8 text (the
-    same recipe the oracle replays). Every row is filtered with type
-    row % 5, so ALL FIVE scanline filters (None/Sub/Up/Average/Paeth)
-    appear in every image taller than 4 rows and the decoder's
-    unfiltering is exercised for real. The IDAT stream is split across
-    two chunks when possible (spec-legal, forces reassembly) and a tEXt
-    chunk sits before them (decoder must skip ancillary chunks). The
-    closure is self-contained and pickled by value — executors never
-    import this package (see _ppm_encode_fn)."""
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import binascii
-        import struct
-        import zlib
-
-        import numpy as np
-
-        def chunk(ctype: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data))
-                + ctype
-                + data
-                + struct.pack(">I", binascii.crc32(ctype + data))
-            )
-
-        def filter_rows(raw: "np.ndarray", w: int, h: int) -> bytes:
-            """Filter each scanline with type row % 5. PNG filters read
-            the RAW bytes of the current and prior scanline (the decoder
-            reconstructs them), so encoding is fully vectorized."""
-            stride = w * 3
-            img = raw.reshape(h, stride).astype(np.int64)
-            out = bytearray()
-            for r in range(h):
-                cur = img[r]
-                prior = img[r - 1] if r else np.zeros(stride, np.int64)
-                left = np.concatenate(([0, 0, 0], cur[:-3]))
-                upleft = np.concatenate(([0, 0, 0], prior[:-3]))
-                f = r % 5
-                if f == 0:
-                    filt = cur
-                elif f == 1:  # Sub
-                    filt = cur - left
-                elif f == 2:  # Up
-                    filt = cur - prior
-                elif f == 3:  # Average
-                    filt = cur - (left + prior) // 2
-                else:  # Paeth
-                    p = left + prior - upleft
-                    pa = np.abs(p - left)
-                    pb = np.abs(p - prior)
-                    pc = np.abs(p - upleft)
-                    pred = np.where(
-                        (pa <= pb) & (pa <= pc),
-                        left,
-                        np.where(pb <= pc, prior, upleft),
-                    )
-                    filt = cur - pred
-                out.append(f)
-                out.extend((filt % 256).astype(np.uint8).tobytes())
-            return bytes(out)
-
-        for pdf in batches:
-            blobs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w = int(2 + doc_id % 6)
-                h = int(2 + doc_id % 5)
-                need = w * h * 3
-                t = np.frombuffer(bytes(payload), dtype=np.uint8)
-                raw = (
-                    np.resize(t, need)  # cycles the source bytes
-                    if t.size
-                    else np.zeros(need, dtype=np.uint8)
-                )
-                idat = zlib.compress(filter_rows(raw, w, h))
-                mid = len(idat) // 2
-                parts = [
-                    b"\x89PNG\r\n\x1a\n",
-                    chunk(
-                        b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-                    ),
-                    chunk(b"tEXt", b"Comment\x00smrr synthetic"),
-                ]
-                if mid:  # spec-legal multi-IDAT: decoder must reassemble
-                    parts += [
-                        chunk(b"IDAT", idat[:mid]),
-                        chunk(b"IDAT", idat[mid:]),
-                    ]
-                else:
-                    parts.append(chunk(b"IDAT", idat))
-                parts.append(chunk(b"IEND", b""))
-                blobs.append(b"".join(parts))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "png": blobs})
-
-    return encode
-
-
-def _png_decode_fn():
-    """Factory for the PNG decode kernel: signature check, chunk walk
-    with CRC32 verification, IHDR validation (8-bit RGB, deflate,
-    filter method 0, no interlace), multi-IDAT reassembly,
-    zlib.decompress, and per-scanline unfiltering for all five filter
-    types (RFC 2083 §6) — then the same per-channel integer means the
-    PPM path emits. Rejects bad signatures, CRC mismatches, truncated
-    streams, and unsupported IHDR shapes. Self-contained closure (see
-    _ppm_encode_fn for the pickling contract)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import binascii
-        import struct
-        import zlib
-
-        import numpy as np
-
-        def parse(b: bytes) -> tuple[int, int, bytes]:
-            """(width, height, raw RGB bytes) or raise ValueError."""
-            if b[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError("not a PNG: bad signature")
-            pos, end = 8, len(b)
-            ihdr = None
-            idat = bytearray()
-            seen_iend = False
-            while pos < end:
-                if pos + 8 > end:
-                    raise ValueError("truncated PNG: chunk header")
-                (length,) = struct.unpack(">I", b[pos : pos + 4])
-                ctype = b[pos + 4 : pos + 8]
-                data = b[pos + 8 : pos + 8 + length]
-                if len(data) != length or pos + 12 + length > end:
-                    raise ValueError("truncated PNG: chunk data")
-                (crc,) = struct.unpack(
-                    ">I", b[pos + 8 + length : pos + 12 + length]
-                )
-                if binascii.crc32(ctype + data) != crc:
-                    raise ValueError(f"CRC mismatch in {ctype!r} chunk")
-                if ctype == b"IHDR":
-                    ihdr = struct.unpack(">IIBBBBB", data)
-                elif ctype == b"IDAT":
-                    idat.extend(data)
-                elif ctype == b"IEND":
-                    seen_iend = True
-                    break
-                # ancillary chunks (tEXt etc.) are skipped
-                pos += 12 + length
-            if ihdr is None or not seen_iend:
-                raise ValueError("PNG missing IHDR or IEND")
-            w, h, depth, ctype_i, comp, filt, inter = ihdr
-            if (depth, ctype_i, comp, filt, inter) != (8, 2, 0, 0, 0):
-                raise ValueError(
-                    "unsupported PNG shape (want 8-bit RGB, deflate, "
-                    "filter method 0, no interlace)"
-                )
-            stride = w * 3
-            want = h * (1 + stride)
-            try:
-                # bounded inflate: a corrupt/hostile IDAT must not be
-                # able to expand past the declared raster size (zip-bomb
-                # guard — at fleet scale an unbounded decompress is an
-                # executor OOM vector); +1 detects overflow cheaply
-                d = zlib.decompressobj()
-                stream = d.decompress(bytes(idat), want + 1)
-            except zlib.error as exc:
-                # CRC-consistent but corrupt deflate data (coordinated
-                # corruption) must keep the ValueError contract
-                raise ValueError(f"corrupt PNG deflate stream: {exc}") from exc
-            if len(stream) != want or not d.eof:
-                raise ValueError("PNG raster size mismatch")
-            recon = np.zeros((h, stride), dtype=np.int64)
-            for r in range(h):
-                row = stream[r * (1 + stride) : (r + 1) * (1 + stride)]
-                f, filt_b = row[0], np.frombuffer(
-                    row, dtype=np.uint8, offset=1
-                ).astype(np.int64)
-                prior = recon[r - 1] if r else np.zeros(stride, np.int64)
-                if f == 0:
-                    recon[r] = filt_b
-                elif f == 2:  # Up — vectorized, prior row fully known
-                    recon[r] = (filt_b + prior) % 256
-                elif f in (1, 3, 4):
-                    # Sub/Average/Paeth reconstruct left-to-right: the
-                    # left neighbor is the already-RECONSTRUCTED byte
-                    cur = recon[r]
-                    for i in range(stride):
-                        a = cur[i - 3] if i >= 3 else 0  # left
-                        bb = prior[i]  # up
-                        if f == 1:
-                            pred = a
-                        elif f == 3:
-                            pred = (a + bb) // 2
-                        else:
-                            c = prior[i - 3] if i >= 3 else 0  # up-left
-                            p = a + bb - c
-                            pa, pb_, pc = abs(p - a), abs(p - bb), abs(p - c)
-                            pred = (
-                                a
-                                if pa <= pb_ and pa <= pc
-                                else (bb if pb_ <= pc else c)
-                            )
-                        cur[i] = (filt_b[i] + pred) % 256
-                else:
-                    raise ValueError(f"unknown PNG filter type {f}")
-            return w, h, recon.reshape(-1).astype(np.uint8).tobytes()
-
-        for pdf in batches:
-            ids, ws, hs, means = [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["png"]):
-                w, h, raw = parse(bytes(blob))
-                px = np.frombuffer(raw, dtype=np.uint8).reshape(h * w, 3)
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                means.append(px.sum(axis=0, dtype=np.int64) * 1000 // (w * h))
-            m = np.stack(means) if means else np.empty((0, 3), dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "mean_r_milli": m[:, 0],
-                    "mean_g_milli": m[:, 1],
-                    "mean_b_milli": m[:, 2],
-                }
-            )
-
-    return decode
-
-
-def decode_image_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG codec round trip, stdlib-only (RFC 2083: zlib deflate +
-    the five scanline filters + CRC-checked chunks). Encode each doc as
-    a valid 8-bit RGB PNG — per-row filter type rotates through all
-    five, IDAT split across two chunks, an ancillary tEXt chunk to skip
-    — then decode with a full parser (signature, CRC verification,
-    IHDR validation, IDAT reassembly, inflate, per-filter scanline
-    reconstruction) and emit per-channel integer means.
-
-    The DuckDB oracle (shared template with decode_image_ppm, different
-    dimension formula) recomputes the features straight from the text
-    bytes: a hash match proves the filter/compress/chunk round trip is
-    lossless. Replaces ``resize_image_fake`` in the registry (r11
-    verdict item 4); the NotImplementedError seam now covers only
-    JPEG/webp/audio/video, which genuinely need external codecs.
-    """
-    df = _with_payload(spark, sf_dir)
-    encoded = df.mapInPandas(_png_encode_fn(), "doc_id long, png binary")
-    return encoded.mapInPandas(
-        _png_decode_fn(),
-        "doc_id long, width long, height long, "
-        "mean_r_milli long, mean_g_milli long, mean_b_milli long",
-    )
-
-
-DECODE_IMAGE_PNG_SQL = _decode_image_oracle_sql(PNG_W_EXPR, PNG_H_EXPR)
-
-
-# --- WAV codec (RIFF/PCM; Microsoft/IBM spec, public) ---------------
-#
-# The audio leg of the multimodal suite made real: RIFF container
-# parsing is bytes + arithmetic, no library needed (same argument as
-# P6/PNG). Per-doc audio shape varies so the decoder must genuinely
-# read fmt/data chunks.
-WAV_CHANNELS_EXPR = "1 + doc_id % 2"  # mono / stereo
-WAV_RATE_EXPR = "8000 * (1 + doc_id % 3)"  # 8/16/24 kHz
-WAV_FRAMES_EXPR = "40 + doc_id % 30"
-
-
-def _wav_encode_fn():
-    """Factory for the WAV encode kernel: a spec-conformant RIFF/WAVE
-    writer (stdlib struct only). 16-bit PCM; channels/rate/frames vary
-    per doc; samples map the doc's cycled UTF-8 bytes to int16 via
-    (byte - 128) * 256 (zero bytes for empty docs). A LIST/INFO chunk
-    with an ODD payload sits between fmt and data — RIFF pads chunks to
-    word boundaries, and a decoder that forgets the pad byte desyncs
-    (the deliberate spec trap, like PNG's split IDAT). Self-contained
-    closure (see _ppm_encode_fn for the pickling contract)."""
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        def chunk(ctype: bytes, data: bytes) -> bytes:
-            pad = b"\x00" if len(data) % 2 else b""  # word-align
-            return ctype + struct.pack("<I", len(data)) + data + pad
-
-        for pdf in batches:
-            blobs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                ch = int(1 + doc_id % 2)
-                rate = int(8000 * (1 + doc_id % 3))
-                frames = int(40 + doc_id % 30)
-                n_samp = frames * ch
-                t = np.frombuffer(bytes(payload), dtype=np.uint8)
-                b = (
-                    np.resize(t, n_samp)
-                    if t.size
-                    else np.zeros(n_samp, dtype=np.uint8)
-                )
-                samples = ((b.astype(np.int64) - 128) * 256).astype("<i2")
-                fmt = struct.pack(
-                    "<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16
-                )  # PCM, block align = ch * 16-bit
-                body = (
-                    b"WAVE"
-                    + chunk(b"fmt ", fmt)
-                    + chunk(b"LIST", b"INFOIART\x05\x00\x00\x00smrr\x00")
-                    + chunk(b"data", samples.tobytes())
-                )
-                blobs.append(
-                    b"RIFF" + struct.pack("<I", len(body)) + body
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "wav": blobs})
-
-    return encode
-
-
-def _wav_decode_fn():
-    """Factory for the WAV decode kernel: RIFF walker (magic, WAVE form
-    type, word-aligned chunk traversal), fmt validation (PCM, 16-bit),
-    data extraction, then integer sample statistics. Rejects non-RIFF,
-    truncated chunks, non-PCM and non-16-bit input, and a data chunk
-    that disagrees with the fmt block alignment. Self-contained closure
-    (see _ppm_encode_fn for the pickling contract)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        def parse(b: bytes) -> tuple[int, int, "np.ndarray"]:
-            """(sample_rate, channels, int64 samples) or ValueError."""
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE payload")
-            (riff_size,) = struct.unpack("<I", b[4:8])
-            if riff_size + 8 > len(b):
-                raise ValueError("truncated WAV: RIFF size past end")
-            pos, end = 12, 8 + riff_size
-            fmt = data = None
-            while pos + 8 <= end:
-                ctype = b[pos : pos + 4]
-                (length,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-                if pos + 8 + length > end:
-                    raise ValueError("truncated WAV: chunk past RIFF end")
-                payload = b[pos + 8 : pos + 8 + length]
-                if len(payload) != length:
-                    raise ValueError("truncated WAV: chunk data")
-                if ctype == b"fmt ":
-                    fmt = payload
-                elif ctype == b"data":
-                    data = payload
-                # word-aligned traversal: odd chunks carry a pad byte
-                pos += 8 + length + (length % 2)
-            if fmt is None or data is None:
-                raise ValueError("WAV missing fmt or data chunk")
-            if len(fmt) < 16:
-                raise ValueError("malformed fmt chunk")
-            audio_fmt, ch, rate, _, block, bits = struct.unpack(
-                "<HHIIHH", fmt[:16]
-            )
-            if audio_fmt != 1 or bits != 16:
-                raise ValueError("unsupported WAV (want 16-bit PCM)")
-            if block != ch * 2 or len(data) % block:
-                raise ValueError("data chunk disagrees with block align")
-            samples = np.frombuffer(data, dtype="<i2").astype(np.int64)
-            return rate, ch, samples
-
-        for pdf in batches:
-            ids, rates, chs, frames, means, peaks = [], [], [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["wav"]):
-                rate, ch, s = parse(bytes(blob))
-                ids.append(doc_id)
-                rates.append(rate)
-                chs.append(ch)
-                frames.append(len(s) // ch)
-                # mean can be NEGATIVE (int16 PCM): divide truncating
-                # toward zero to match DuckDB's `//` (-7 // 2 = -3
-                # there, -4 in Python/numpy — the image paths never hit
-                # this because pixel sums are non-negative)
-                tot = int(s.sum()) * 1000
-                q = abs(tot) // s.size if s.size else 0
-                means.append(-q if tot < 0 else q)
-                peaks.append(int(s.max()) if s.size else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "sample_rate": pd.Series(rates, dtype="int64"),
-                    "channels": pd.Series(chs, dtype="int64"),
-                    "n_frames": pd.Series(frames, dtype="int64"),
-                    "mean_milli": pd.Series(means, dtype="int64"),
-                    "peak": pd.Series(peaks, dtype="int64"),
-                }
-            )
-
-    return decode
-
-
-def decode_audio_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio-codec round trip, stdlib-only: encode each doc as a
-    valid 16-bit PCM RIFF/WAVE file (mono/stereo, 8-24 kHz and frame
-    count varying per doc; an odd-length LIST chunk forces word-aligned
-    traversal), decode with an actual RIFF parser, and emit integer
-    sample statistics. The DuckDB oracle recomputes the stats straight
-    from the text bytes and the per-doc shape formulas — a hash match
-    proves the PCM pack/parse round trip is lossless. Third real codec
-    beside decode_image_ppm/decode_image_png; the NotImplementedError
-    seam now covers only compressed media (JPEG/webp, lossy audio,
-    video)."""
-    df = _with_payload(spark, sf_dir)
-    encoded = df.mapInPandas(_wav_encode_fn(), "doc_id long, wav binary")
-    return encoded.mapInPandas(
-        _wav_decode_fn(),
-        "doc_id long, sample_rate long, channels long, n_frames long, "
-        "mean_milli long, peak long",
-    )
-
-
-# Sample i (1-based) = (byte_((i-1) mod n)+1 - 128) * 256 over cycled
-# text bytes, zero bytes for empty docs; stats are exact int arithmetic.
-DECODE_AUDIO_WAV_SQL = f"""
-WITH b AS (
-    SELECT doc_id, hex(encode(text)) AS h,
-           octet_length(encode(text))::BIGINT AS n,
-           ({WAV_CHANNELS_EXPR})::BIGINT AS ch,
-           ({WAV_RATE_EXPR})::BIGINT AS rate,
-           ({WAV_FRAMES_EXPR})::BIGINT AS frames
-    FROM documents
-),
-s AS (
-    SELECT doc_id, ch, rate, frames,
-      [ ({cycled_byte_sql("i-1")} - 128) * 256
-        for i in range(1, frames*ch + 1) ] AS smp
-    FROM b
-)
-SELECT doc_id, rate AS sample_rate, ch AS channels, frames AS n_frames,
-       CAST(list_sum(smp) * 1000 // (frames*ch) AS BIGINT) AS mean_milli,
-       CAST(list_max(smp) AS BIGINT) AS peak
-FROM s
-"""
-
-
-def decode_media_stub(df: DataFrame, media_col: str = "payload") -> DataFrame:
-    """Where a real decoder plugs in (PIL / torchaudio / ffmpeg).
-
-    Shape contract: mapInPandas over (id, binary) batches → typed feature
-    frame (e.g. width/height/channels or sample-rate/duration). The
-    container ships no media libraries, so executing the returned plan
-    raises ``NotImplementedError`` from inside the UDF — the Spark-side
-    schema and batching are real and type-checked. ``decode_image_pil``
-    below is the plugged-in version: identical plumbing, real decode
-    wherever Pillow is installed on the executors.
-    """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raise NotImplementedError(
-            "media decoding requires an image/audio library not present in "
-            "this environment; plug a real decoder into decode_media_stub"
-        )
-        yield  # pragma: no cover — marks this as a generator
-
-    return df.mapInPandas(
-        decode, "doc_id long, width int, height int, channels int"
-    )
-
-
-def decode_image_pil(df: DataFrame, media_col: str = "payload") -> DataFrame:
-    """Real-codec image decode, enabled wherever Pillow is installed.
-
-    Same shape contract as ``decode_media_stub`` — mapInPandas over
-    (doc_id, binary) batches → (doc_id, width, height, channels) — but
-    with an actual decoder. PIL imports inside the UDF on the executor:
-    plan construction always succeeds, and on a cluster without Pillow
-    execution raises ``NotImplementedError`` (the documented seam), so
-    this degrades to exactly the stub's behavior in this container.
-    """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            from PIL import Image
-        except ImportError as exc:  # container ships no codecs
-            raise NotImplementedError(
-                "decode_image_pil requires Pillow on the executors; "
-                "pip install pillow or use decode_image_ppm for the "
-                "library-free real-codec (Netpbm P6) path"
-            ) from exc
-        import io
-
-        for pdf in batches:
-            doc_ids, widths, heights, channels = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[media_col]):
-                with Image.open(io.BytesIO(bytes(payload))) as im:
-                    doc_ids.append(doc_id)
-                    widths.append(im.width)
-                    heights.append(im.height)
-                    channels.append(len(im.getbands()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="int64"),
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "channels": pd.Series(channels, dtype="int32"),
-                }
-            )
-
-    return df.mapInPandas(
-        decode, "doc_id long, width int, height int, channels int"
-    )
-
-
 N_FRAMES = 3
 FRAME_BYTES = 32
 
@@ -1050,24 +357,5 @@ QUERIES: dict[str, Query] = {
         payload_byte_stats,
         PAYLOAD_BYTE_STATS_SQL,
         "Arrow-batched mapInPandas byte stats over binary payloads",
-    ),
-    "decode_image_ppm": Query(
-        decode_image_ppm,
-        DECODE_IMAGE_PPM_SQL,
-        "real Netpbm P6 codec round trip: encode + header-parse decode via mapInPandas",
-    ),
-    # r12: decode_image_png REPLACES resize_image_fake in this slot
-    # (verdict item 4; registry stays at 152). The resize stage itself
-    # remains above as pipeline plumbing + direct tests — only its
-    # registry seat moved to the second real codec.
-    "decode_image_png": Query(
-        decode_image_png,
-        DECODE_IMAGE_PNG_SQL,
-        "real PNG codec round trip: zlib+filters+CRC encode/decode via mapInPandas",
-    ),
-    "decode_audio_wav": Query(
-        decode_audio_wav,
-        DECODE_AUDIO_WAV_SQL,
-        "real RIFF/PCM WAV codec round trip: word-aligned chunk walk via mapInPandas",
     ),
 }

@@ -207,8 +207,10 @@ def _last_verified_round() -> dict[str, int]:
 
 
 def all_queries() -> dict[str, Query]:
-    """Full registry. Modules with optional deps are imported lazily so a
-    broken extension can never take down the core registry.
+    """Full registry: the built-in queries plus every extension module's
+    QUERIES. Extension modules are imported here, not at package import;
+    a module that fails to import raises instead of silently dropping
+    its queries from the registry.
 
     Ordering contract (r5): least-recently-driver-verified first. The
     driver gate records only the first GATE_WIDTH entries per round, so a
@@ -221,11 +223,7 @@ def all_queries() -> dict[str, Query]:
     """
     q = _builtin_queries()
     for loader in _EXTENSION_LOADERS:
-        try:
-            q.update(loader())
-        except ImportError:
-            # extension module not built yet (incremental rounds)
-            pass
+        q.update(loader())
     last = _last_verified_round()
     names = sorted(q, key=lambda name: (last.get(name, 0), name))
     return {name: q[name] for name in names}

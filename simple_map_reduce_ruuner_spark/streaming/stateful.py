@@ -86,8 +86,7 @@ def stream_running_user_totals_tws(
     Environment note: executing this stream requires ``google.protobuf``
     (the state-server protocol dependency of transformWithState); this
     container ships a broken protobuf, so the plan BUILDS here (tested)
-    but only executes on a cluster with protobuf installed — same
-    gated-dependency contract as multimodal.decode_image_pil. The
+    but only executes on a cluster with protobuf installed. The
     processor class is defined inside this function so cloudpickle
     serializes it by value and executors never import this package.
     """

@@ -1,10 +1,10 @@
-"""Mutation fuzzing over all seven real codecs: flipping any single
-byte (or truncating at any point) of a valid file must either decode
-cleanly (flips in don't-care or data regions legitimately change
-values) or raise ValueError — never IndexError, KeyError, struct.error,
-zlib.error, or a numpy shape error. This is the malformed-input
-contract the unit tests pin pointwise, enforced here across the whole
-byte surface. Seeded and deterministic.
+"""Mutation fuzzing over every real codec in the production table:
+flipping any single byte (or truncating at any point) of a valid file
+must either decode cleanly (flips in don't-care or data regions
+legitimately change values) or raise ValueError — never IndexError,
+KeyError, struct.error, zlib.error, or a numpy shape error. This is
+the malformed-input contract the unit tests pin pointwise, enforced
+here across the whole byte surface. Seeded and deterministic.
 """
 
 from __future__ import annotations
@@ -13,72 +13,32 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from simple_map_reduce_ruuner_spark.operators.codecs import (
-    _avi_decode_fn,
-    _avi_encode_fn,
-    _gif_decode_fn,
-    _gif_encode_fn,
-    _jpeg_decode_fn,
-    _jpeg_encode_fn,
-    _mulaw_decode_fn,
-    _mulaw_encode_fn,
-    _tar_decode_fn,
-    _tar_encode_fn,
-    _tga_decode_fn,
-    _tga_encode_fn,
-    _gzip_decode_fn,
-    _gzip_encode_fn,
-    _sqlite_decode_fn,
-    _sqlite_encode_fn,
-    _xz_decode_fn,
-    _xz_encode_fn,
-    _zip_decode_fn,
-    _zip_encode_fn,
-)
-from simple_map_reduce_ruuner_spark.operators.multimodal import (
-    _png_decode_fn,
-    _png_encode_fn,
-    _ppm_decode_fn,
-    _ppm_encode_fn,
-    _wav_decode_fn,
-    _wav_encode_fn,
-)
+from simple_map_reduce_ruuner_spark.operators.codecs import CODECS, kernels
 
-CODECS = {
-    "ppm": (_ppm_encode_fn, _ppm_decode_fn, "ppm"),
-    "png": (_png_encode_fn, _png_decode_fn, "png"),
-    "wav": (_wav_encode_fn, _wav_decode_fn, "wav"),
-    "jpeg": (_jpeg_encode_fn, _jpeg_decode_fn, "jpg"),
-    "mulaw": (_mulaw_encode_fn, _mulaw_decode_fn, "wav"),
-    "avi": (_avi_encode_fn, _avi_decode_fn, "avi"),
-    "gif": (_gif_encode_fn, _gif_decode_fn, "gif"),
-    "tga": (_tga_encode_fn, _tga_decode_fn, "tga"),
-    "tar": (_tar_encode_fn, _tar_decode_fn, "tar"),
-    "zip": (_zip_encode_fn, _zip_decode_fn, "zip"),
-    "gzip": (_gzip_encode_fn, _gzip_decode_fn, "gz"),
-    "xz": (_xz_encode_fn, _xz_decode_fn, "xz"),
-    "sqlite": (_sqlite_encode_fn, _sqlite_decode_fn, "db"),
-}
+# one entry per production codec row, keyed by the format token of its
+# encode factory (_ppm_encode_fn -> "ppm"), which names the test cases
+FORMATS = {c.encode.__name__.split("_")[1]: c for c in CODECS.values()}
+assert len(FORMATS) == len(CODECS)
 
 N_FLIPS = 400
 N_TRUNCS = 120
 
 
-def _valid_blob(encode_fn, doc_id: int = 7) -> bytes:
+def _valid_blob(codec, doc_id: int = 7) -> bytes:
     pdf = pd.DataFrame({"doc_id": [doc_id], "payload": [b"fuzz me gently 123"]})
-    enc = pd.concat(list(encode_fn()([pdf])), ignore_index=True)
+    enc = pd.concat(list(kernels(codec)[0]([pdf])), ignore_index=True)
     return bytes(enc.iloc[0, 1])
 
 
-def _decode_one(decode_fn, blob_col: str, blob: bytes):
-    pdf = pd.DataFrame({"doc_id": [7], blob_col: [blob]})
-    return pd.concat(list(decode_fn()([pdf])), ignore_index=True)
+def _decode_one(codec, blob: bytes):
+    pdf = pd.DataFrame({"doc_id": [7], codec.blob: [blob]})
+    return pd.concat(list(kernels(codec)[1]([pdf])), ignore_index=True)
 
 
-@pytest.mark.parametrize("name", sorted(CODECS))
+@pytest.mark.parametrize("name", sorted(FORMATS))
 def test_single_byte_flips_never_escape_value_error(name):
-    encode_fn, decode_fn, col = CODECS[name]
-    blob = _valid_blob(encode_fn)
+    codec = FORMATS[name]
+    blob = _valid_blob(codec)
     rng = np.random.RandomState(42)
     for _ in range(N_FLIPS):
         pos = int(rng.randint(0, len(blob)))
@@ -86,7 +46,7 @@ def test_single_byte_flips_never_escape_value_error(name):
         mutated = bytearray(blob)
         mutated[pos] ^= val
         try:
-            _decode_one(decode_fn, col, bytes(mutated))
+            _decode_one(codec, bytes(mutated))
         except ValueError:
             pass  # the documented rejection contract
         except Exception as exc:  # noqa: BLE001 — the assertion itself
@@ -104,7 +64,7 @@ def test_png_crc_consistent_deflate_corruption():
     import binascii
     import struct
 
-    blob = _valid_blob(_png_encode_fn)
+    blob = _valid_blob(FORMATS["png"])
     pos = blob.find(b"IDAT")
     (length,) = struct.unpack(">I", blob[pos - 4 : pos])
     data = bytearray(blob[pos + 4 : pos + 4 + length])
@@ -117,7 +77,7 @@ def test_png_crc_consistent_deflate_corruption():
         + blob[pos + 4 + length + 4 :]
     )
     with pytest.raises(ValueError, match="corrupt PNG deflate"):
-        _decode_one(_png_decode_fn, "png", mutated)
+        _decode_one(FORMATS["png"], mutated)
 
 
 def test_decompression_bombs_rejected_before_allocation():
@@ -129,24 +89,24 @@ def test_decompression_bombs_rejected_before_allocation():
     import zlib
 
     # JPEG: rewrite SOF0 dims to 65528 x 65528 (multiples of 8)
-    blob = _valid_blob(_jpeg_encode_fn)
+    blob = _valid_blob(FORMATS["jpeg"])
     at = blob.find(b"\xff\xc0") + 5
     bad = blob[:at] + struct.pack(">HH", 65528, 65528) + blob[at + 4 :]
     with pytest.raises(ValueError, match="raster too large"):
-        _decode_one(_jpeg_decode_fn, "jpg", bad)
+        _decode_one(FORMATS["jpeg"], bad)
 
     # GIF: rewrite LSD + descriptor dims to 65535 x 65535
-    blob = _valid_blob(_gif_encode_fn)
+    blob = _valid_blob(FORMATS["gif"])
     big = struct.pack("<HH", 65535, 65535)
     desc = blob.find(b"\x2c", 6 + 7 + 768)
     bad = (
         blob[:6] + big + blob[10 : desc + 5] + big + blob[desc + 9 :]
     )
     with pytest.raises(ValueError, match="raster too large"):
-        _decode_one(_gif_decode_fn, "gif", bad)
+        _decode_one(FORMATS["gif"], bad)
 
     # PNG: CRC-consistent IDAT that inflates far past the raster size
-    blob = _valid_blob(_png_encode_fn)
+    blob = _valid_blob(FORMATS["png"])
     import binascii
 
     bomb = zlib.compress(bytes(1 << 22))  # 4 MiB of zeros, ~4 KB packed
@@ -166,18 +126,18 @@ def test_decompression_bombs_rejected_before_allocation():
         + blob[end_second:]
     )
     with pytest.raises(ValueError, match="raster size mismatch"):
-        _decode_one(_png_decode_fn, "png", bad)
+        _decode_one(FORMATS["png"], bad)
 
 
-@pytest.mark.parametrize("name", sorted(CODECS))
+@pytest.mark.parametrize("name", sorted(FORMATS))
 def test_truncations_never_escape_value_error(name):
-    encode_fn, decode_fn, col = CODECS[name]
-    blob = _valid_blob(encode_fn)
+    codec = FORMATS[name]
+    blob = _valid_blob(codec)
     rng = np.random.RandomState(1234)
     cuts = sorted(set(int(c) for c in rng.randint(0, len(blob), N_TRUNCS)))
     for cut in cuts:
         try:
-            _decode_one(decode_fn, col, blob[:cut])
+            _decode_one(codec, blob[:cut])
         except ValueError:
             pass
         except Exception as exc:  # noqa: BLE001

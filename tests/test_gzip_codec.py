@@ -15,20 +15,22 @@ import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
+    CODECS,
     GZIP_HEAD_BYTES,
-    _gzip_decode_fn,
-    _gzip_encode_fn,
+    kernels,
 )
+
+CODEC = CODECS["gzip_member_stats"]
 
 
 def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_gzip_encode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[0]([pdf])), ignore_index=True)
 
 
 def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "gz": blobs})
-    return pd.concat(list(_gzip_decode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[1]([pdf])), ignore_index=True)
 
 
 def test_roundtrip_two_members_and_stats():
@@ -131,7 +133,7 @@ def test_bomb_guard_caps_inflated_size():
 
 def test_empty_batch_yields_typed_empty_frame():
     out = pd.concat(
-        list(_gzip_decode_fn()([pd.DataFrame({"doc_id": [], "gz": []})])),
+        list(kernels(CODEC)[1]([pd.DataFrame({"doc_id": [], "gz": []})])),
         ignore_index=True,
     )
     assert list(out.columns) == [

@@ -17,23 +17,25 @@ import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
+    CODECS,
     JPEG_AC_BITS,
     JPEG_AC_VALS,
     JPEG_DC_BITS,
     JPEG_DC_VALS,
-    _jpeg_decode_fn,
-    _jpeg_encode_fn,
+    kernels,
 )
+
+CODEC = CODECS["decode_image_jpeg"]
 
 
 def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "jpg": blobs})
-    return pd.concat(list(_jpeg_decode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[1]([pdf])), ignore_index=True)
 
 
 def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_jpeg_encode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[0]([pdf])), ignore_index=True)
 
 
 # --- independent mini-encoder (test-local, NOT the production code) ---

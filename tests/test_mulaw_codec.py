@@ -16,19 +16,21 @@ import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
-    _mulaw_decode_fn,
-    _mulaw_encode_fn,
+    CODECS,
+    kernels,
 )
+
+CODEC = CODECS["decode_audio_mulaw"]
 
 
 def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "wav": blobs})
-    return pd.concat(list(_mulaw_decode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[1]([pdf])), ignore_index=True)
 
 
 def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_mulaw_encode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[0]([pdf])), ignore_index=True)
 
 
 def _wav(ch: int, codes: bytes, with_fact: bool = True, tag: int = 7) -> bytes:

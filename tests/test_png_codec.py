@@ -1,4 +1,4 @@
-"""PNG codec kernels (multimodal.decode_image_png), driven directly
+"""PNG codec kernels (codecs.decode_image_png), driven directly
 through the production factories — no Spark session needed.
 
 The decoder must be a REAL parser: verify the signature and every
@@ -18,22 +18,24 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from simple_map_reduce_ruuner_spark.operators.multimodal import (
-    _png_decode_fn,
-    _png_encode_fn,
+from simple_map_reduce_ruuner_spark.operators.codecs import (
+    CODECS,
+    kernels,
 )
+
+CODEC = CODECS["decode_image_png"]
 
 
 def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
     pdf = pd.DataFrame(
         {"doc_id": ids or list(range(len(blobs))), "png": blobs}
     )
-    return pd.concat(list(_png_decode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[1]([pdf])), ignore_index=True)
 
 
 def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_png_encode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[0]([pdf])), ignore_index=True)
 
 
 def _chunk(ctype: bytes, data: bytes) -> bytes:

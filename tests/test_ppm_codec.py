@@ -1,4 +1,4 @@
-"""Netpbm P6 codec kernels (multimodal.decode_image_ppm), driven
+"""Netpbm P6 codec kernels (codecs.decode_image_ppm), driven
 directly through the production factories — no Spark session needed.
 
 The decoder must be a REAL parser: accept any spec-valid header
@@ -13,17 +13,19 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from simple_map_reduce_ruuner_spark.operators.multimodal import (
-    _ppm_decode_fn,
-    _ppm_encode_fn,
+from simple_map_reduce_ruuner_spark.operators.codecs import (
+    CODECS,
+    kernels,
 )
+
+CODEC = CODECS["decode_image_ppm"]
 
 
 def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
     pdf = pd.DataFrame(
         {"doc_id": ids or list(range(len(blobs))), "ppm": blobs}
     )
-    return pd.concat(list(_ppm_decode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[1]([pdf])), ignore_index=True)
 
 
 def _ppm(w: int, h: int, px: bytes, header: bytes | None = None) -> bytes:
@@ -34,7 +36,7 @@ def test_roundtrip_inverts_encoder():
     pdf = pd.DataFrame(
         {"doc_id": [1, 2], "payload": [b"abc", b""]}  # cycled + zero-fill
     )
-    encoded = pd.concat(list(_ppm_encode_fn()([pdf])), ignore_index=True)
+    encoded = pd.concat(list(kernels(CODEC)[0]([pdf])), ignore_index=True)
     out = _decode(list(encoded["ppm"]), list(encoded["doc_id"]))
     # doc 1: w=4+1%5=5, h=3+1%7=4; R channel cycles abc -> indices 0,3,6..
     row = out[out.doc_id == 1].iloc[0]

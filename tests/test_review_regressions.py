@@ -131,12 +131,13 @@ def test_image_oracles_index_bytes_not_characters(spark, tmp_path):
     decode_image_ppm additionally covers the empty-doc raster
     (zero-filled pixels, no cycling possible) and the full real-format
     round trip on multi-byte text."""
+    from simple_map_reduce_ruuner_spark.operators.codecs import QUERIES
     from simple_map_reduce_ruuner_spark.operators.multimodal import (
-        DECODE_IMAGE_PPM_SQL,
         RESIZE_IMAGE_FAKE_SQL,
-        decode_image_ppm,
         resize_image_fake,
     )
+
+    ppm = QUERIES["decode_image_ppm"]
 
     rows = [
         (1, "é" * 40, "fr", "synth", 80),
@@ -156,7 +157,7 @@ def test_image_oracles_index_bytes_not_characters(spark, tmp_path):
         f" read_parquet('{sf_dir}/documents.parquet/*.parquet')"
     )
     for fn, sql in (
-        (decode_image_ppm, DECODE_IMAGE_PPM_SQL),
+        (ppm.fn, ppm.oracle),
         (resize_image_fake, RESIZE_IMAGE_FAKE_SQL),
     ):
         got = sorted(map(tuple, fn(spark, sf_dir).collect()))

@@ -14,20 +14,22 @@ import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
+    CODECS,
     SQLITE_HEAD_BYTES,
-    _sqlite_decode_fn,
-    _sqlite_encode_fn,
+    kernels,
 )
+
+CODEC = CODECS["sqlite_table_stats"]
 
 
 def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_sqlite_encode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[0]([pdf])), ignore_index=True)
 
 
 def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "db": blobs})
-    return pd.concat(list(_sqlite_decode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[1]([pdf])), ignore_index=True)
 
 
 def _custom_db(rows, pragmas: list[str] = ()) -> bytes:
@@ -140,7 +142,7 @@ def test_parser_rejections_and_fuzz():
 
 def test_empty_batch_yields_typed_empty_frame():
     out = pd.concat(
-        list(_sqlite_decode_fn()([pd.DataFrame({"doc_id": [], "db": []})])),
+        list(kernels(CODEC)[1]([pd.DataFrame({"doc_id": [], "db": []})])),
         ignore_index=True,
     )
     assert list(out.columns) == ["doc_id", "row_idx", "n_bytes", "sum_bytes"]

@@ -18,20 +18,22 @@ import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
+    CODECS,
     TAR_HEAD_BYTES,
-    _tar_decode_fn,
-    _tar_encode_fn,
+    kernels,
 )
+
+CODEC = CODECS["tar_shard_members"]
 
 
 def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "tar": blobs})
-    return pd.concat(list(_tar_decode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[1]([pdf])), ignore_index=True)
 
 
 def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_tar_encode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[0]([pdf])), ignore_index=True)
 
 
 def test_stdlib_tarfile_reads_our_shards():

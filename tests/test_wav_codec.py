@@ -1,4 +1,4 @@
-"""RIFF/PCM WAV codec kernels (multimodal.decode_audio_wav), driven
+"""RIFF/PCM WAV codec kernels (codecs.decode_audio_wav), driven
 directly through the production factories — no Spark session needed.
 
 The decoder must be a REAL RIFF parser: word-aligned chunk traversal
@@ -15,22 +15,24 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from simple_map_reduce_ruuner_spark.operators.multimodal import (
-    _wav_decode_fn,
-    _wav_encode_fn,
+from simple_map_reduce_ruuner_spark.operators.codecs import (
+    CODECS,
+    kernels,
 )
+
+CODEC = CODECS["decode_audio_wav"]
 
 
 def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
     pdf = pd.DataFrame(
         {"doc_id": ids or list(range(len(blobs))), "wav": blobs}
     )
-    return pd.concat(list(_wav_decode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[1]([pdf])), ignore_index=True)
 
 
 def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_wav_encode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[0]([pdf])), ignore_index=True)
 
 
 def _wav(ch: int, rate: int, samples: np.ndarray, extra: bytes = b"") -> bytes:

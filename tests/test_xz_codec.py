@@ -15,20 +15,22 @@ import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
+    CODECS,
     XZ_HEAD_BYTES,
-    _xz_decode_fn,
-    _xz_encode_fn,
+    kernels,
 )
+
+CODEC = CODECS["xz_block_stats"]
 
 
 def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_xz_encode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[0]([pdf])), ignore_index=True)
 
 
 def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
     pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "xz": blobs})
-    return pd.concat(list(_xz_decode_fn()([pdf])), ignore_index=True)
+    return pd.concat(list(kernels(CODEC)[1]([pdf])), ignore_index=True)
 
 
 def test_roundtrip_two_blocks_and_stats():
@@ -167,7 +169,7 @@ def test_bomb_guard_caps_inflated_size():
 
 def test_empty_batch_yields_typed_empty_frame():
     out = pd.concat(
-        list(_xz_decode_fn()([pd.DataFrame({"doc_id": [], "xz": []})])),
+        list(kernels(CODEC)[1]([pd.DataFrame({"doc_id": [], "xz": []})])),
         ignore_index=True,
     )
     assert list(out.columns) == ["doc_id", "block_idx", "n_bytes", "sum_bytes"]
